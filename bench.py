@@ -103,6 +103,47 @@ STAGED_TOTAL_PIN = (
 )
 
 
+# Whoever runs bench.py keeps only the last 2000 characters of its
+# output, so the final (contract) line must be shorter to parse at all.
+CONTRACT_LINE_MAX = 2000
+
+
+def contract_line(
+    total: float,
+    timings: dict[str, float],
+    sf: float,
+    staged_total: float,
+    loadavg_start: list[float],
+) -> str:
+    """The final contract line: metric / value / unit / sf plus the
+    headline per-query map rounded to 2 decimals. If that does not fit
+    under CONTRACT_LINE_MAX characters, the line drops the map (the
+    compact form) and says so on stderr — a long line fails loudly
+    instead of being cut by the capture."""
+    rec = {
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": {k: round(v, 2) for k, v in timings.items()},
+        "sf": sf,
+        "runs": 2,
+        "agg": "min",
+        "staged_total": staged_total,
+        "loadavg_start": loadavg_start,
+    }
+    line = json.dumps(rec, separators=(",", ":"))
+    if len(line) >= CONTRACT_LINE_MAX:
+        print(
+            f"bench: contract line is {len(line)} chars "
+            f"(limit {CONTRACT_LINE_MAX}); dropping its per-query map",
+            file=sys.stderr,
+        )
+        del rec["queries"]
+        line = json.dumps(rec, separators=(",", ":"))
+    assert len(line) < CONTRACT_LINE_MAX, line
+    return line
+
+
 def main() -> None:
     from mysql2parquet_spark.queries import all_queries
     from mysql2parquet_spark.session import get_spark
@@ -303,12 +344,12 @@ def main() -> None:
     #   2. {"staged2": {...}} — the staged per-query map rounded to
     #      2 decimals; its TAIL (~800 chars, ~30 entries) survives the
     #      capture for human reconstruction;
-    #   3. the contract line LAST (~1.2 KB < 2000, measured): metric /
-    #      value / unit / sf AND the full 49-entry headline "queries"
-    #      map rounded to 2 decimals — the driver's parse target now
-    #      carries per-query data. Methodology (same queries, same
-    #      min-of-2, same noop sink) unchanged; this is output format
-    #      only (OPTIMIZATION_r15.md item 3).
+    #   3. the contract line LAST (~1.2 KB < 2000, measured; see
+    #      contract_line for the guard): metric / value / unit / sf
+    #      AND the full 49-entry headline "queries" map rounded to 2
+    #      decimals — the parse target carries per-query data.
+    #      Methodology (same queries, same min-of-2, same noop sink)
+    #      unchanged; this is output format only.
     print(
         json.dumps(
             {
@@ -333,22 +374,7 @@ def main() -> None:
             separators=(",", ":"),
         )
     )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": {k: round(v, 2) for k, v in timings.items()},
-                "sf": float(sf),
-                "runs": 2,
-                "agg": "min",
-                "staged_total": staged_total,
-                "loadavg_start": loadavg_start,
-            },
-            separators=(",", ":"),
-        )
-    )
+    print(contract_line(total, timings, float(sf), staged_total, loadavg_start))
     spark.stop()
 
 

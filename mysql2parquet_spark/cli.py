@@ -761,6 +761,22 @@ def _run_stream_fold(spark, args, part_cols: list[str] | None = None) -> int:
     return 0
 
 
+def _host_session_exists() -> bool:
+    """True when this process already holds a SparkSession: the active
+    session of this thread, or else the default session of any."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    if SparkSession.getActiveSession() is not None:
+        return True
+    sc = SparkContext._active_spark_context
+    return sc is not None and bool(
+        SparkSession._get_j_spark_session_class(sc._jvm)
+        .getDefaultSession()
+        .isDefined()
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     parser = build_parser()
     args = parser.parse_args(argv)
@@ -1184,10 +1200,10 @@ def main(argv: list[str] | None = None) -> int:
     # the host's SparkContext out from under it (SparkContext is
     # process-global). So: stop only what we started. This is also what
     # makes the CLI contract tests runnable in-process instead of one
-    # ~12 s JVM boot per invocation (r15).
-    from pyspark.sql import SparkSession
-
-    _preexisting = SparkSession.getActiveSession()
+    # ~12 s JVM boot per invocation. The active session is per thread,
+    # so a host session built on another thread shows up only as the
+    # JVM's default session.
+    _preexisting = _host_session_exists()
     spark = get_spark("mysql2parquet-spark-cli", master=args.master)
     try:
         if args.stream_events:
@@ -1478,7 +1494,7 @@ def main(argv: list[str] | None = None) -> int:
                 return rc
         return 0
     finally:
-        if _preexisting is None:
+        if not _preexisting:
             spark.stop()
 
 

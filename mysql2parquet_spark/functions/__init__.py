@@ -9,6 +9,7 @@ from mysql2parquet_spark.functions.vector import (  # noqa: F401
     cosine_similarity,
     dot,
     l2_norm,
+    lit_vector,
     quantize_int8,
 )
 from mysql2parquet_spark.functions.hashing import (  # noqa: F401

@@ -126,7 +126,11 @@ def minhash_doc_signatures(
     ON A DRIVER THREAD while the D74b planner's bounded-metadata
     collect runs on the main thread (guide §2.6 "overlap independent
     jobs") and band it afterwards. Pinning (doc, sig) also writes
-    1 row/doc instead of the banded form's bands rows/doc."""
+    1 row/doc instead of the banded form's bands rows/doc.
+
+    ``num_hashes`` is stamped into the ``sig`` column's metadata (it
+    survives the checkpoint), so a consumer checks the hash budget
+    from the schema without running a job."""
     n_spread = df.sparkSession.sparkContext.defaultParallelism
     src = df.select(
         F.col(id_col).alias("doc"), F.col(text_col).alias("_txt")
@@ -136,7 +140,7 @@ def minhash_doc_signatures(
             "doc",
             minhash_signature(
                 shingles("_txt", shingle_n), num_hashes
-            ).alias("sig"),
+            ).alias("sig", metadata={"num_hashes": num_hashes}),
         ).repartition("doc")
     )
 
@@ -197,23 +201,22 @@ def _minhash_collisions(
     # fold is already materialized and banding is a cheap posexplode
     # projection each side recomputes from the checkpoint.
     if signatures is not None:
-        # Budget-contract guard (ADVICE r14): the pre-built signature
-        # length must equal THIS call's num_hashes, or band_hashes
-        # indexes past the array (NULL keys / ANSI error) and
-        # _sig_agreement divides by the wrong count — silently skewed
-        # est_jaccard. One bounded probe row (the D85 caller passes an
-        # eagerly pinned relation, so this reads one checkpoint row).
-        probe = (
-            signatures.select(F.size("sig").alias("_n"))
-            .limit(1)
-            .collect()  # bounded-metadata (<= 1 row, budget guard)
-        )
-        if probe and probe[0]["_n"] != num_hashes:
+        # Budget-contract guard: the pre-built signature length must
+        # equal THIS call's num_hashes, or band_hashes indexes past the
+        # array (NULL keys / ANSI error) and _sig_agreement divides by
+        # the wrong count — silently skewed est_jaccard. Checked against
+        # the stamp minhash_doc_signatures puts on ``sig``: no job.
+        stamp = (signatures.schema["sig"].metadata or {}).get("num_hashes")
+        if stamp != num_hashes:
+            got = (
+                "no num_hashes stamp"
+                if stamp is None
+                else f"{stamp}-hash signatures"
+            )
             raise ValueError(
-                f"signatures= carries {probe[0]['_n']}-hash signatures "
-                f"but num_hashes={num_hashes} — the pre-built relation "
-                "must be built with the same hash budget "
-                "(minhash_doc_signatures(num_hashes=...))"
+                f"signatures= carries {got} but num_hashes={num_hashes} "
+                "— the pre-built relation must be built with the same "
+                "hash budget (minhash_doc_signatures(num_hashes=...))"
             )
         banded = signatures.select(
             "doc",

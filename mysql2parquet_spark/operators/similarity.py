@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from mysql2parquet_spark.functions.vector import cosine_similarity, dot, l2_norm
+from mysql2parquet_spark.functions.vector import (
+    cosine_similarity,
+    dot,
+    l2_norm,
+    lit_vector,
+    sql_double_array,
+)
 
 
 def score_against(
@@ -138,8 +144,7 @@ def hyperplane_buckets(
     planes = rng.standard_normal((num_planes, dim))
     bucket = F.lit(0)
     for i in range(num_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[i]])
-        d = dot(vec_col, plane)
+        d = dot(vec_col, lit_vector(planes[i]))
         bucket = bucket * 2 + F.when(d >= 0, 1).otherwise(0)
     return df.withColumn("bucket", bucket)
 
@@ -267,8 +272,7 @@ def ivf_assign(
         raise ValueError(f"unknown ivf_assign method: {method}")
     candidates = []
     for cid, vec in cents:
-        lit_vec = F.array(*[F.lit(x) for x in vec])
-        sim = cosine_similarity(F.col(vec_col), lit_vec)
+        sim = cosine_similarity(F.col(vec_col), lit_vector(vec))
         # NULL sim (zero-norm) must not poison array_max's struct compare:
         # map it to -inf so some centroid still wins deterministically.
         sim = F.coalesce(sim, F.lit(float("-inf")))
@@ -460,10 +464,8 @@ def ivf_probe(
     cell = data.filter(F.col("centroid_id").isin(probe_ids))
     if exclude_id is not None:
         cell = cell.filter(F.col(id_col) != exclude_id)
-    lit_q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = cell.select(
-        id_col, cosine_similarity(vec_col, lit_q).alias("score")
-    )
+    sim = cosine_similarity(vec_col, lit_vector(query_vec))
+    scored = cell.select(id_col, sim.alias("score"))
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 
@@ -696,8 +698,9 @@ def semantic_dedup(
     elif assign_method == "fold":
         candidates = []
         for cid, vec in cents:
-            lit_vec = F.array(*[F.lit(x) for x in vec])
-            sim = F.round(cosine_similarity(F.col(vec_col), lit_vec), 4)
+            sim = F.round(
+                cosine_similarity(F.col(vec_col), lit_vector(vec)), 4
+            )
             sim = F.coalesce(sim, F.lit(float("-inf")))  # zero-norm rows
             candidates.append(
                 F.struct(sim.alias("sim"), F.lit(-cid).alias("ncid"))
@@ -914,6 +917,65 @@ def embedding_health_report(
     )
 
 
+# Candidate-pool size of one kcenter_greedy sync: the rows (id, vector,
+# min-distance) one TakeOrderedAndProject pulls to the driver.
+_KCENTER_POOL = 1024
+
+
+def _kcenter_dist_sql(center: list | None) -> str:
+    """The kcenter distance fold to one literal center as ONE SQL string
+    (parsed by a single ``F.expr``): ``Σ (x−c)²`` left to right in
+    double from 0.0 over the state's ``_vec``. A ragged pair (zip_with
+    pads with NULL), a NULL element or a NULL center gives a NULL
+    distance."""
+    arr = (
+        "CAST(NULL AS ARRAY<DOUBLE>)"
+        if center is None
+        else sql_double_array(center)
+    )
+    return (
+        f"aggregate(zip_with(_vec, {arr}, "
+        "(x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)), "
+        "0.0D, (acc, d) -> acc + d)"
+    )
+
+
+def _pool_matrix(vecs: list) -> tuple:
+    """Pulled vectors as an (n × width) float64 matrix plus each row's
+    length (−1 for a NULL vector); NULL elements read as NaN."""
+    import numpy as np
+
+    lens = np.array(
+        [-1 if v is None else len(v) for v in vecs], dtype=np.int64
+    )
+    mat = np.full((len(vecs), int(lens.max(initial=0))), np.nan)
+    for i, v in enumerate(vecs):
+        if v:
+            mat[i, : len(v)] = np.array(v, dtype=np.float64)
+    return mat, lens
+
+
+def _pool_dist(mat, lens, center: list | None):
+    """``_kcenter_dist_sql`` evaluated on the driver over a pulled pool,
+    vectorized across rows: one float64 subtract, multiply and add per
+    dimension in the JVM's order (never ``np.sum``, whose pairwise
+    summation rounds differently), so every value is bit-equal to
+    Spark's. NaN where Spark's fold is NaN or NULL — both lose every
+    ``least``/``np.fmin`` against a non-NaN min-distance."""
+    import numpy as np
+
+    acc = np.zeros(len(lens))
+    if center is None or len(center) > mat.shape[1]:
+        acc[:] = np.nan
+        return acc
+    c = np.array(center, dtype=np.float64)
+    for j in range(len(c)):
+        d = mat[:, j] - c[j]
+        acc = acc + d * d
+    acc[lens != len(c)] = np.nan
+    return acc
+
+
 def kcenter_greedy(
     df: DataFrame,
     k: int = 16,
@@ -938,16 +1000,26 @@ def kcenter_greedy(
     twin reproduces it bit-for-bit, tests/test_kcenter.py), and every
     argmax breaks ties by id. No RNG anywhere.
 
-    Scale shape: the running min-distance-to-chosen-set column is
-    updated INCREMENTALLY — each of the k iterations is one
-    zero-shuffle projection (distance to the single newest center,
-    ``least`` with the standing column) + one TakeOrderedAndProject
-    argmax (per-partition heaps, 1-row driver merge — bounded
-    metadata, the kmeans_lite contract), with a localCheckpoint
-    pinning the state so lineage depth stays constant in k (the D41
-    discipline). Total cost k scans — k is a human-review budget
-    (tens), never data-scale; for k beyond that, pre-filter with a
-    density sampler and run this on the sample (docstring contract).
+    Scale shape — a CERTIFIED CANDIDATE POOL, exact: the running
+    min-distance-to-chosen-set column ``_mind`` lives in a lazily
+    localCheckpointed state (lineage depth constant in k, the D41
+    discipline). One sync job applies every center chosen since the
+    last sync in one zero-shuffle projection (``least(_mind, d_1, …,
+    d_m)``) and pulls the top ``P = 1024`` rows by ``(_mind desc, id
+    asc)`` with their vectors — a TakeOrderedAndProject, so the driver
+    receives at most P rows of (id, vector, ``_mind``) per task. The
+    driver then continues the farthest-point picks over the pool with
+    the same float64 fold and ``least`` semantics (``np.fmin``: a NaN
+    or NULL distance never wins). A pick is accepted only while it is
+    certified: its updated ``(_mind, id)`` key must rank at or above
+    the P-th pulled row's key, which outranks every row left out, and
+    min-distances only fall — so the pick is the global argmax. An
+    uncertified pick triggers the next sync; a pull of fewer than P
+    rows holds every remaining row and needs no check. The selection
+    is bit-identical to one Spark round per center; at k=16 it takes
+    2 jobs on 500 vectors and 3 on 2000, instead of 16. k is a
+    human-review budget (tens), never data-scale; for k beyond that,
+    pre-filter with a density sampler and run this on the sample.
 
     Returns ``(sel_rank, vec_id, dist_sq)`` — ``dist_sq`` is the
     squared distance to the previously-chosen set at selection time
@@ -955,78 +1027,26 @@ def kcenter_greedy(
     input returns an empty frame with this schema (never an
     IndexError on the seed argmax — ADVICE r11).
     """
+    import numpy as np
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
+    pool = _KCENTER_POOL
+    base = df.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
+    )
     sq = F.aggregate(
-        F.col(vec_col),
+        F.col("_vec"),
         F.lit(0.0),
         lambda acc, x: acc + x.cast("double") * x.cast("double"),
     )
     seed_rows = (
-        df.select(id_col, vec_col, sq.alias("_d"))
-        .orderBy(F.col("_d").desc(), F.col(id_col).asc())
+        base.select("_id", "_vec", sq.alias("_d"))
+        .orderBy(F.col("_d").desc(), F.col("_id").asc())
         .limit(1)
         .collect()  # bounded-metadata: the 1-row argmax seed
     )
-    if not seed_rows:
-        # ADVICE r11: an empty input returns an empty selection with
-        # the declared schema instead of an IndexError on the seed.
-        chosen = []
-        k = 1  # skip the selection loop below
-        center: list[float] = []
-        state = df.select(id_col, vec_col).withColumn(
-            "_mind", F.lit(float("inf"))
-        )
-    else:
-        seed = seed_rows[0]
-        chosen = [(1, seed[id_col], None)]
-        center = [float(x) for x in seed[vec_col]]
-        state = df.select(id_col, vec_col).filter(
-            F.col(id_col) != F.lit(seed[id_col])
-        ).withColumn("_mind", F.lit(float("inf")))
-    for rank in range(2, k + 1):
-        # The checkpoint is LAZY (r14): a TOAP computes every
-        # partition, so the materialization piggybacks on the argmax
-        # job below instead of paying its own driver-blocking job per
-        # round — 2 jobs per round -> 1 (measured 4.8 -> 3.5 s at
-        # sf0.1). The distance stays the zip_with fold: an unrolled
-        # per-round expression was MEASURED SLOWER here (each of the
-        # k rounds rebuilds and recompiles a fresh ~400-node
-        # expression — py4j construction + janino per round dwarf the
-        # interpreted fold on one scan; unlike dot_unrolled's
-        # build-once pair stage).
-        cvec = F.array(*[F.lit(c) for c in center])
-        dist = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                cvec,
-                lambda x, c: (x.cast("double") - c)
-                * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        )
-        state = state.withColumn(
-            "_mind", F.least(F.col("_mind"), dist)
-        ).localCheckpoint(eager=False)
-        far = (
-            state.orderBy(F.col("_mind").desc(), F.col(id_col).asc())
-            .limit(1)
-            .collect()  # bounded-metadata: the 1-row argmax per round
-        )
-        if not far:
-            break
-        row = far[0]
-        chosen.append((rank, row[id_col], float(row["_mind"])))
-        center = [float(x) for x in row[vec_col]]
-        state = state.filter(F.col(id_col) != F.lit(row[id_col]))
-    from pyspark.sql.types import (
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    spark = df.sparkSession
     schema = StructType(
         [
             StructField("sel_rank", IntegerType(), False),
@@ -1034,7 +1054,56 @@ def kcenter_greedy(
             StructField("dist_sq", DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(chosen, schema=schema)
+    if not seed_rows:
+        return df.sparkSession.createDataFrame([], schema=schema)
+    seed = seed_rows[0]
+    chosen = [(1, seed["_id"], None)]
+    # (id, vector) of the centers not yet applied to the state
+    picked = [(seed["_id"], seed["_vec"])]
+    state = base.withColumn("_mind", F.lit(float("inf")))
+    while len(chosen) < k:
+        state = (
+            state.filter(~F.col("_id").isin([i for i, _ in picked]))
+            .withColumn(
+                "_mind",
+                F.least(
+                    F.col("_mind"),
+                    *[F.expr(_kcenter_dist_sql(v)) for _, v in picked],
+                ),
+            )
+            .localCheckpoint(eager=False)
+        )
+        rows = (
+            state.orderBy(F.col("_mind").desc(), F.col("_id").asc())
+            .limit(pool)
+            .collect()  # bounded-metadata: <= P rows per task
+        )
+        picked = []
+        ids = [r["_id"] for r in rows]
+        mind = np.array([r["_mind"] for r in rows], dtype=np.float64)
+        mat, lens = _pool_matrix([r["_vec"] for r in rows])
+        full = len(rows) == pool
+        if full:
+            # the P-th row's key as pulled: every row left out ranks
+            # below it, and min-distances only fall
+            floor_mind, floor_id = float(mind[-1]), ids[-1]
+        alive = np.ones(len(rows), dtype=bool)
+        while len(chosen) < k and alive.any():
+            top = mind[alive].max()
+            i = min(
+                np.flatnonzero(alive & (mind == top)), key=ids.__getitem__
+            )
+            if full and not (
+                top > floor_mind or (top == floor_mind and ids[i] <= floor_id)
+            ):
+                break  # not certified: a row outside the pool may win
+            chosen.append((len(chosen) + 1, ids[i], float(top)))
+            picked.append((ids[i], rows[i]["_vec"]))
+            alive[i] = False
+            mind = np.fmin(mind, _pool_dist(mat, lens, rows[i]["_vec"]))
+        if not full:
+            break  # the pool held every remaining row
+    return df.sparkSession.createDataFrame(chosen, schema=schema)
 
 
 def jl_sign_projection(

@@ -3894,13 +3894,21 @@ def embedding_health(spark, sf_dir):
     "from everything chosen -- the diversity-maximizing counterpart "
     "of the density samplers (D14/D46/D57), covering the embedding "
     "space's extremes for review sets and codebook init. "
-    "Deterministic end to end (no RNG: fixed folds + id tie-breaks); "
-    "each of the k rounds is one zero-shuffle distance projection "
-    "against the single newest center + a TakeOrderedAndProject "
-    "1-row argmax (bounded metadata), with localCheckpoint pinning "
-    "the running min-distance state so lineage stays constant in k "
-    "(the D41 discipline). k is a review budget (16 here), never "
-    "data-scale.",
+    "Deterministic end to end (no RNG: fixed folds + id tie-breaks). "
+    "Exact certified candidate pool: one sync job applies every "
+    "center chosen since the last sync in one zero-shuffle projection "
+    "(least of the running min-distance and each new center's "
+    "distance fold) and pulls the top P=1024 rows by (min-distance "
+    "desc, id asc) through a TakeOrderedAndProject -- at most P rows "
+    "of (id, vector, min-distance) per task reach the driver. The "
+    "driver continues the farthest-point picks over the pool with the "
+    "same float64 folds and accepts a pick only while its key ranks at "
+    "or above the P-th pulled row's (every row left out ranks below "
+    "it, and min-distances only fall); an uncertified pick triggers "
+    "the next sync. localCheckpoint pins the min-distance state so "
+    "lineage stays constant in k (the D41 discipline). k=16 here: 2-3 "
+    "Spark jobs instead of one per center. k is a review budget, "
+    "never data-scale.",
 )
 def sample_kcenter(spark, sf_dir):
     e = T(spark, sf_dir, "embeddings")

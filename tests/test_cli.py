@@ -11,6 +11,7 @@ import sys
 from types import SimpleNamespace
 
 from mysql2parquet_spark.cli import _split_session_prelude, build_parser, main
+from tests.conftest import restore_sql_confs
 
 
 def _run_inproc(cmd, capture_output=True, text=True, timeout=300):
@@ -26,7 +27,10 @@ def _run_inproc(cmd, capture_output=True, text=True, timeout=300):
     (test_end_to_end_tables_dir) to keep the console-process path
     covered. Temp views registered by an invocation are dropped
     afterward so cross-test table-name leakage cannot mask a
-    missing-table error path."""
+    missing-table error path, and every modifiable SQL conf main()
+    changed (its get_spark applies the engine defaults, e.g.
+    ``spark.sql.shuffle.partitions``, to the reused session) is put
+    back."""
     assert cmd[0] == sys.executable and cmd[1:3] == [
         "-m",
         "mysql2parquet_spark.cli",
@@ -38,6 +42,7 @@ def _run_inproc(cmd, capture_output=True, text=True, timeout=300):
         "mysql2parquet_spark-tests", master="local[4]", shuffle_partitions=8
     )
     before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    confs = spark.conf.getAll
     out, err = _io.StringIO(), _io.StringIO()
     with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
         try:
@@ -50,6 +55,7 @@ def _run_inproc(cmd, capture_output=True, text=True, timeout=300):
                 spark.catalog.dropTempView(t.name)
             except Exception:
                 pass
+    restore_sql_confs(spark, confs)
     return SimpleNamespace(
         returncode=rc, stdout=out.getvalue(), stderr=err.getvalue()
     )
@@ -134,6 +140,36 @@ def test_end_to_end_tables_dir(tmp_path, sf_dir):
         f"SELECT count(*) FROM read_parquet('{out}.parquet')"
     ).fetchone()[0]
     assert n == 3
+
+
+def test_main_on_another_thread_keeps_the_host_session(tmp_path, spark, sf_dir):
+    """A host session built on one thread is not the ACTIVE session of
+    another (the active session is per thread), so main() run on a
+    second thread must find it as the JVM default session and leave it
+    running."""
+    import threading
+
+    out = tmp_path / "out"
+    box = {}
+
+    def run():
+        box["res"] = subprocess.run(
+            [
+                sys.executable, "-m", "mysql2parquet_spark.cli",
+                "--tables-dir", sf_dir,
+                "--query",
+                "SELECT n_regionkey, count(*) AS c FROM nation GROUP BY 1",
+                "--parquet", str(out),
+            ]
+        )
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert box["res"].returncode == 0, box["res"].stderr[-1500:]
+    assert spark.sparkContext._jsc is not None  # not stopped
+    assert spark.read.parquet(str(out)).count() == 5
 
 
 def test_merge_into_requires_keys_and_distinct_paths(capsys, tmp_path):

@@ -231,3 +231,46 @@ def test_signatures_path_matches_inline(spark):
     assert sorted(r.doc_id for r in via_sig.collect()) == sorted(
         r.doc_id for r in inline.collect()
     )
+
+
+def test_signatures_guard_reads_the_stamp_without_a_job(spark):
+    """The num_hashes guard on signatures= compares the stamp that
+    minhash_doc_signatures puts on ``sig`` (it survives the eager
+    checkpoint) — a mismatch and a missing stamp both raise before any
+    Spark job runs."""
+    from pyspark.sql import functions as F
+
+    from mysql2parquet_spark.operators.dedup import (
+        minhash_dedup,
+        minhash_doc_signatures,
+    )
+    from tests.conftest import spark_jobs
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"near duplicate body number {i % 5} " * 4) for i in range(30)]
+    )
+    sigs = minhash_doc_signatures(
+        docs, "doc_id", "text", shingle_n=3, num_hashes=32
+    )
+    assert sigs.schema["sig"].metadata == {"num_hashes": 32}
+    # same values, built without the stamp
+    bare = sigs.select("doc", F.expr("transform(sig, h -> h)").alias("sig"))
+    with spark_jobs(spark, "test-minhash-signature-guard") as jobs:
+        with pytest.raises(ValueError, match="32-hash signatures but num_hashes=16"):
+            minhash_dedup(
+                docs, "doc_id", "text", from_plan=(4, 4), signatures=sigs
+            )
+        with pytest.raises(ValueError, match="no num_hashes stamp but num_hashes=32"):
+            minhash_dedup(
+                docs, "doc_id", "text", from_plan=(8, 4), signatures=bare
+            )
+    assert jobs == []
+
+
+def test_planned_dedup_signature_path_passes_the_guard(spark, sf_dir):
+    """The registered D85 face pins its signatures on a driver thread
+    and hands them to minhash_dedup(signatures=...): the stamp must
+    survive that localCheckpoint or the guard would refuse it."""
+    from mysql2parquet_spark.queries import all_queries
+
+    assert all_queries()["dedup_minhash_planned"](spark, sf_dir).count() > 0
